@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .schemas import ALL_TABLES
 
@@ -33,10 +34,67 @@ FIXTURE_TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def file_identity(path: str) -> tuple[str, int, int]:
+    """``(abspath, size, mtime_ns)``: what tells one generation of a file
+    from the next one written at the same path. Everything derived from a
+    fixture (memoized schemas, at-rest artifacts, staged stream copies) is
+    keyed on it, so a regenerated fixture is never served stale."""
+    p = os.path.abspath(path)
+    st = os.stat(p)
+    return p, st.st_size, st.st_mtime_ns
+
+
+# Session settings that change what a footer read infers from one file.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+_schemas: dict[tuple, StructType] = {}
+
+
+def read_parquet(
+    spark: SparkSession, path: str, key, schema: StructType | None = None
+) -> DataFrame:
+    """Scan ``path`` with a declared schema, so Spark starts no job to read
+    parquet footers.
+
+    ``key`` names immutable content: a :func:`file_identity`, or a
+    content-keyed directory that is never rewritten. The schema is
+    ``schema`` when the caller already knows it (it is remembered under
+    ``key``); otherwise it is inferred from the footers once per ``key``
+    and inference settings, and remembered for the life of the process.
+    Two threads racing on a new key only infer it twice."""
+    k = (key, *(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    if schema is not None:
+        _schemas[k] = schema
+    else:
+        schema = _schemas.get(k)
+        if schema is None:
+            schema = _schemas[k] = spark.read.parquet(path).schema
+    return spark.read.schema(schema).parquet(path)
+
+
+def forget_schemas(root: str) -> None:
+    """Drop remembered schemas keyed on ``root`` or a directory under it
+    (the artifact store calls this when it deletes artifacts)."""
+    for k in list(_schemas):
+        key = k[0]
+        if isinstance(key, str) and (key == root or key.startswith(root + os.sep)):
+            _schemas.pop(k, None)
+
+
 def load_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Parquet scan: column pruning + predicate
     pushdown come free from the declarative plan — never .cache() these;
     at 100 TB the scan with pushed filters IS the fast path.
+
+    Schema-on-read with a declared schema (SURVEY §1.2): the footer schema
+    is inferred once per file identity and inference settings
+    (:func:`read_parquet`), so a repeat read of the same file starts no
+    Spark job; a fixture rewritten at the same path has a new identity and
+    is inferred afresh.
 
     Timestamp normalization: fixture generations have varied — events.ts
     has been TIMESTAMP(NANOS) (vectorized reader rejects; read nanos as
@@ -44,19 +102,21 @@ def load_fixture(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (Spark 4 infers TIMESTAMP_NTZ, which functions like ``unix_millis``
     reject). Both are normalized to session-UTC TimestampType: under a UTC
     session the NTZ→LTZ cast is wall-clock-identical, which is exactly how
-    DuckDB reads the same parquet (naive timestamp), so oracles agree."""
+    DuckDB reads the same parquet (naive timestamp), so oracles agree.
+    tests/test_catalog.py writes both generations and pins them equal."""
     # Engine semantic (SURVEY.md §4): all timestamp arithmetic is UTC — the
     # reference's `TIMESTAMP 'epoch' + …` is UTC arithmetic. Pin the session
     # TZ here so results are correct even on a caller-built session.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # TIMESTAMP(NANOS) reads as long (converted below). Set for every table,
+    # not only events: the setting is part of the schema memo's key, and a
+    # session that flipped it at its first events read would infer every
+    # table read before that once more.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    else:
-        df = spark.read.parquet(path)
+    df = read_parquet(spark, path, file_identity(path))
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     for col, dtype in df.dtypes:
         if dtype == "timestamp_ntz":
             df = df.withColumn(col, F.col(col).cast("timestamp"))

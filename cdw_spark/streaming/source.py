@@ -17,6 +17,7 @@ a test/driver device — the production sink is ``writeStream.format(
 
 from __future__ import annotations
 
+import hashlib
 import itertools
 import os
 import shutil
@@ -26,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _qid = itertools.count()
-_STAGE_ROOT = os.path.join(tempfile.gettempdir(), "cdw_stream_src")
+_STAGE_ROOT = os.path.join(tempfile.gettempdir(), "cdw_stream_stage")
 
 
 def replay_scratch(prefix: str) -> str:
@@ -89,12 +90,37 @@ class replay_partition_cap:
         return False
 
 
+def _staging_dir(sf_dir: str, table: str, suffix: str) -> str:
+    """Staged-copy directory of one fixture table:
+    ``<root>/<path key>__<table>__<suffix>/<identity tag>``.
+
+    The identity tag hashes the fixture's file identity (as the artifact
+    store's keys do), so a fixture rewritten at the same path stages a new
+    copy instead of replaying the old one; the stale copies beside it are
+    removed once the new one is staged (:func:`_sweep_stale`)."""
+    from ..catalog import file_identity
+
+    ident = file_identity(os.path.join(sf_dir, f"{table}.parquet"))
+    tag = hashlib.sha256("|".join(map(str, ident)).encode()).hexdigest()[:12]
+    key = f"{sf_dir.strip('/').replace('/', '_')}__{table}__{suffix}"
+    return os.path.join(_STAGE_ROOT, key, tag)
+
+
+def _sweep_stale(out: str) -> None:
+    """Remove the staged copies of earlier generations of the same fixture."""
+    parent, keep = os.path.split(out)
+    for name in os.listdir(parent):
+        if name != keep:
+            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+
+
 def stage_ordered_files(
     spark: SparkSession, sf_dir: str, table: str = "events", n_files: int = 8,
     order_col: str = "ts",
 ) -> str:
     """Split a fixture table into ``n_files`` event-time-ordered parquet
-    files (staged once per (sf_dir, table, n); cached across calls).
+    files (staged once per (fixture identity, table, n); cached across
+    calls).
 
     ``repartitionByRange`` on the time column makes part-00000 hold the
     earliest rows; file mtimes are then stamped in that order because the
@@ -107,10 +133,8 @@ def stage_ordered_files(
     # MISS — pin unconditionally so a caller-built non-UTC session gets
     # the same hour()/window() semantics on the cache-hit path too.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = f"{sf_dir.strip('/').replace('/', '_')}__{table}__{n_files}"
-    if order_col != "ts":
-        key += f"__{order_col}"
-    out = os.path.join(_STAGE_ROOT, key)
+    suffix = str(n_files) if order_col == "ts" else f"{n_files}__{order_col}"
+    out = _staging_dir(sf_dir, table, suffix)
     done = os.path.join(out, "_STAGED")
     if not os.path.exists(done):
         # load_fixture normalizes the fixture's TIMESTAMP(NANOS) to
@@ -125,35 +149,31 @@ def stage_ordered_files(
             os.utime(os.path.join(out, p), (base + i * 60, base + i * 60))
         with open(done, "w") as f:
             f.write("\n".join(parts))
+        _sweep_stale(out)
     return out
 
 
 def events_stream(
     spark: SparkSession, sf_dir: str, n_files: int = 8, files_per_trigger: int = 1
 ) -> DataFrame:
-    """``readStream`` over the staged events files, one file per micro-batch.
-
-    The file source needs an explicit schema (no inference mid-stream);
-    we take it from a batch read of the same staged directory.
-    """
-    staged = stage_ordered_files(spark, sf_dir, "events", n_files)
-    schema = spark.read.parquet(staged).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", files_per_trigger)
-        .option("latestFirst", "false")
-        .parquet(staged)
-    )
+    """``readStream`` over the staged events files, one file per micro-batch."""
+    return table_stream(spark, sf_dir, "events", "ts", n_files, files_per_trigger)
 
 
 def table_stream(
     spark: SparkSession, sf_dir: str, table: str, order_col: str,
     n_files: int = 4, files_per_trigger: int = 1,
 ) -> DataFrame:
-    """``readStream`` over any staged fixture table (the events_stream
-    shape generalized: documents etc. order by their id column)."""
+    """``readStream`` over any staged fixture table (events order by ``ts``;
+    documents etc. by their id column).
+
+    The file source needs an explicit schema (no inference mid-stream).
+    The staged copy was written from ``load_fixture``, so its schema is
+    ``load_fixture``'s — known without reading the staged footers."""
+    from ..catalog import load_fixture
+
     staged = stage_ordered_files(spark, sf_dir, table, n_files, order_col)
-    schema = spark.read.parquet(staged).schema
+    schema = load_fixture(spark, sf_dir, table).schema
     return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", files_per_trigger)
@@ -224,17 +244,17 @@ def stage_exact_quarters(
     ids dense 0..n-1) — unlike repartitionByRange's SAMPLED boundaries,
     the file membership is a pure function of (id, n_rows), so per-batch
     streaming audits can be restated in SQL oracles. Returns (dir,
-    n_rows); staged once per (sf_dir, table, n_files), mtime-ordered so
-    the file source replays quarters in id order."""
+    n_rows); staged once per (fixture identity, table, n_files),
+    mtime-ordered so the file source replays quarters in id order. The
+    staged copy has ``load_fixture``'s schema."""
     from ..catalog import load_fixture
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = f"{sf_dir.strip('/').replace('/', '_')}__{table}__q{n_files}"
-    out = os.path.join(_STAGE_ROOT, key)
+    out = _staging_dir(sf_dir, table, f"q{n_files}")
     done = os.path.join(out, "_STAGED")
-    df = load_fixture(spark, sf_dir, table)
-    n_rows = df.count()
     if not os.path.exists(done):
+        df = load_fixture(spark, sf_dir, table)
+        n_rows = df.count()
         # Loud precondition (ADVICE r7): the quarter formula silently
         # drops any row whose (id * n_files) div n_rows lands >= n_files,
         # which happens exactly when ids are not dense 0..n-1 (1-based or
@@ -271,4 +291,6 @@ def stage_exact_quarters(
             )
         with open(done, "w") as f:
             f.write(str(n_rows))
-    return out, n_rows
+        _sweep_stale(out)
+    with open(done) as f:
+        return out, int(f.read())

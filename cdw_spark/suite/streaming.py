@@ -1105,6 +1105,7 @@ def stream_bloom_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.window import Window
 
+    from ..catalog import load_fixture
     from ..operators.sketches import bloom_positions
     from ..streaming.source import (
         finish_replay, replay_partition_cap, replay_scratch,
@@ -1112,7 +1113,7 @@ def stream_bloom_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     staged, n_rows = stage_exact_quarters(spark, sf_dir, "documents", "doc_id", 4)
-    schema = spark.read.parquet(staged).schema
+    schema = load_fixture(spark, sf_dir, "documents").schema
 
     root = replay_scratch("cdw_stream_bloomdedup_")
     state_dir = os.path.join(root, "door_state")

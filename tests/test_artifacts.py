@@ -169,3 +169,54 @@ def test_real_publish_failure_raises(spark, sf_dir, monkeypatch):
             serve_at_rest(spark, "fail_probe", fixture, "v1", "spec", build)
     finally:
         clear_family("fail_probe")
+
+
+def test_artifact_key_is_unchanged_by_the_shared_identity_helper(sf_dir):
+    """The content key still hashes ``abspath|size|mtime_ns|version|spec``
+    byte for byte, so artifacts published before catalog.file_identity
+    existed keep hitting."""
+    import hashlib
+
+    fixture = os.path.join(sf_dir, "documents.parquet")
+    p = os.path.abspath(fixture)
+    st = os.stat(p)
+    spec_h = hashlib.sha256(b"SELECT 1").hexdigest()[:16]
+    key = f"{p}|{st.st_size}|{st.st_mtime_ns}|v1|{spec_h}"
+    assert os.path.basename(artifact_dir("probe", fixture, "v1", "SELECT 1")) == (
+        hashlib.sha256(key.encode()).hexdigest()[:16]
+    )
+
+
+def test_hit_starts_no_job_and_matches_footer_read(spark, sf_dir):
+    """A hit serves the published directory with its schema known — the
+    build's on the building call, the footers' once per process after —
+    so it starts no Spark job, and rows and schema equal a footer read
+    (including nullability the build declared non-nullable)."""
+    from pyspark.sql import functions as F
+
+    from cdw_spark.catalog import forget_schemas
+
+    fixture = os.path.join(sf_dir, "region.parquet")
+    clear_family("hit_probe")
+
+    def build():
+        return spark.range(5).withColumn("x", F.array(F.col("id") * 2))
+
+    try:
+        d = artifact_dir("hit_probe", fixture, "v1", "spec")
+        built = serve_at_rest(spark, "hit_probe", fixture, "v1", "spec", build)
+        footer = spark.read.parquet(d)
+        assert built.schema == footer.schema
+        for forget in (False, True):
+            if forget:
+                # a fresh process: the first hit reads the footers once
+                forget_schemas(d)
+                serve_at_rest(spark, "hit_probe", fixture, "v1", "spec", build)
+            jobs = spark.sparkContext._jsc.sc().dagScheduler()
+            before = jobs.numTotalJobs()
+            hit = serve_at_rest(spark, "hit_probe", fixture, "v1", "spec", build)
+            assert jobs.numTotalJobs() == before
+            assert hit.schema == footer.schema
+            assert sorted(hit.collect()) == sorted(footer.collect())
+    finally:
+        clear_family("hit_probe")

@@ -45,3 +45,27 @@ def test_no_cartesian_or_rowwise_python_in_any_batch_plan(spark, sf_dir):
                 if marker in plan:
                     offenders[name] = marker
     assert not offenders, offenders
+
+
+def test_no_footer_read_just_for_a_schema():
+    """``spark.read.parquet(...).schema`` starts a Spark job only to read
+    parquet footers. The engine reads parquet through
+    ``catalog.read_parquet``, which declares a known schema and infers an
+    unknown one once per file identity; that memo is the one place
+    allowed to spend the footer job."""
+    import os
+    import re
+
+    import cdw_spark
+
+    pattern = re.compile(r"\.read\.parquet\([^()]*\)\s*\.schema\b")
+    root = os.path.dirname(cdw_spark.__file__)
+    hits = []
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                with open(path) as fh:
+                    text = fh.read()
+                hits += [(os.path.relpath(path, root), m.group()) for m in pattern.finditer(text)]
+    assert hits == [("catalog.py", ".read.parquet(path).schema")], hits

@@ -12,6 +12,7 @@ the cross-implementation invariants the oracles can't express:
 
 from __future__ import annotations
 
+import os
 
 from cdw_spark.registry import load_all
 
@@ -529,3 +530,53 @@ def test_stream_kmv_matches_batch_sketch_and_bounds_state(spark, sf_dir):
     for t, row in streamed.items():
         assert row["k_actual"] <= _KMV_K
         assert row["kmv_est"] == batch[t]["kmv_est"], t
+
+
+def test_events_stream_over_staged_table_starts_no_job(spark, sf_dir):
+    """The staged copy's schema is load_fixture's, so building the stream
+    plan over an already-staged table reads no parquet footers."""
+    from cdw_spark.streaming.source import events_stream
+
+    events_stream(spark, sf_dir, n_files=4)
+    jobs = spark.sparkContext._jsc.sc().dagScheduler()
+    before = jobs.numTotalJobs()
+    events_stream(spark, sf_dir, n_files=4)
+    assert jobs.numTotalJobs() == before
+
+
+def test_replay_follows_a_fixture_rewritten_at_the_same_path(spark, sf_dir, tmp_path):
+    """The staged stream copy is keyed on the fixture's file identity: a
+    fixture regenerated at the same path is restaged, so the second
+    replay matches the DuckDB oracle over the NEW data instead of
+    replaying the first generation."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from cdw_spark.catalog import file_identity
+    from cdw_spark.compare import compare_frames
+
+    spec = SPECS["stream_static_join"]
+    shutil.copy(os.path.join(sf_dir, "customer.parquet"), tmp_path)
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    path = tmp_path / "events.parquet"
+    identities = set()
+    for gen in range(2):
+        if gen:
+            # second generation: every event moves to the next customer
+            # and its value changes
+            i = events.schema.get_field_index("user_id")
+            events = events.set_column(i, "user_id", pc.add(events["user_id"], 1))
+            i = events.schema.get_field_index("value")
+            events = events.set_column(
+                i, "value", pc.add(events["value"], pa.scalar(1.25))
+            )
+        pq.write_table(events, path)
+        identities.add(file_identity(str(path)))
+        res = compare_frames(
+            spec.name, spec.fn(spark, str(tmp_path)), spec.oracle, str(tmp_path)
+        )
+        assert res.ok, f"generation {gen}: {res}"
+    assert len(identities) == 2
